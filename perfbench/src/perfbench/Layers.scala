@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.community.{Louvain, Summarize}
 import graft.extract.{Embeddings, RuleExtractor}
-import graft.model.{Chunk, Doc, Entity, ExtractedGraphDoc, Page, ResolvesTo, Triple}
+import graft.model.{Chunk, Entity, ExtractedGraphDoc, Page, ResolvesTo, Triple}
 import graft.operators.{GraphAssembly, Lift}
 import graft.pipeline.{Catalog, Pipeline}
 import graft.resolve.Resolution
@@ -18,9 +18,7 @@ object Layers {
   /** Layers timed by direct calls; `corpus` and `pipeline` are derived. */
   val Timed: Seq[String] = Seq("chunk", "extract", "operators", "resolve", "community")
 
-  /** Stage table → the layer whose functions do the stage's work. An
-    * incremental stage `incr_X` is the stage of table `X`.
-    */
+  /** Stage table → the layer whose functions do the stage's work. */
   val StageLayer: Map[String, String] = Map(
     "pages" -> "corpus",
     "chunks" -> "chunk",
@@ -34,22 +32,19 @@ object Layers {
     "resolved_triples" -> "operators",
     "type_relationships" -> "operators",
     "embeddings" -> "resolve",
-    "lsh_sigs" -> "resolve",
     "candidate_pairs" -> "resolve",
     "resolves_to" -> "resolve",
     "communities" -> "community")
 
-  /** Stage tables a flat `Pipeline.run` and `runIncremental` both emit. */
+  /** Stage tables of a flat `Pipeline.run`, in order. */
   val StageTables: Seq[String] = Seq(
     "pages", "chunks", "extracted", "entities", "entity_types", "mentions", "triples",
     "embeddings", "chunk_embeddings", "candidate_pairs", "resolves_to",
     "resolved_triples", "type_relationships", "communities", "community_embeddings")
 
-  def tableOf(stage: String): String = stage.stripPrefix("incr_")
-
   /** Fails when a build emitted a stage the layer map does not cover. */
   def requireCovered(stages: Seq[String]): Unit = {
-    val unknown = stages.map(tableOf).filterNot(StageLayer.contains)
+    val unknown = stages.filterNot(StageLayer.contains)
     if (unknown.nonEmpty) throw new Uncovered(s"stages outside the layer map: ${unknown.mkString(", ")}")
   }
 
@@ -58,45 +53,24 @@ object Layers {
 
   final case class Call(layer: String, name: String, run: () => Unit)
 
-  /** The catalog's rows a build's layers consumed. A full build consumed
-    * whole tables; an incremental batch only its delta rows (`delta_docs`,
-    * `delta_entities`) for chunking, extraction, assembly, entity embedding
-    * and pair scoring, and whole tables for the global recomputes.
+  /** Every layer call on one catalog's input tables; the Louvain call
+    * keeps its result for the summaries call after it.
     */
-  final class Inputs(cat: Catalog, delta: Boolean) {
+  final class Calls(cat: Catalog, cfg: Pipeline.Config, er: Resolution.Params) {
     private val spark = cat.spark
     import spark.implicits._
-
-    private def byDocs(df: DataFrame): DataFrame =
-      if (delta) df.join(cat.read("delta_docs"), Seq("doc_id"), "left_semi") else df
-
-    def chunks: DataFrame = byDocs(cat.read("chunks"))
-    def extracted: DataFrame =
-      if (delta) cat.read("extracted").join(chunks.select("chunk_id"), Seq("chunk_id"), "left_semi")
-      else cat.read("extracted")
-    def entities: DataFrame =
-      if (delta) cat.read("entities").join(cat.read("delta_entities"), Seq("entity_id"), "left_semi")
-      else cat.read("entities")
-    def docs: DataFrame = byDocs(GraphAssembly.docs(cat.read("pages").as[Page]).toDF())
-  }
-
-  /** Every layer call for one catalog; the Louvain call keeps its result
-    * for the summaries call after it.
-    */
-  final class Calls(cat: Catalog, cfg: Pipeline.Config, er: Resolution.Params, delta: Boolean) {
-    private val spark = cat.spark
-    import spark.implicits._
-    private val in = new Inputs(cat, delta)
-    private def ext = in.extracted.as[ExtractedGraphDoc]
+    private def docs = GraphAssembly.docs(cat.read("pages").as[Page])
+    private def chunks = cat.read("chunks")
+    private def ext = cat.read("extracted").as[ExtractedGraphDoc]
     var louvain: Louvain.Result = _
 
     val all: Seq[Call] = Seq(
       Call("chunk", "GraphAssembly.chunks",
-        () => sink(GraphAssembly.chunks(in.docs.as[Doc], Pipeline.chunkerFor(cfg)).toDF())),
+        () => sink(GraphAssembly.chunks(docs, Pipeline.chunkerFor(cfg)).toDF())),
       Call("extract", "GraphAssembly.extractAll",
-        () => sink(GraphAssembly.extractAll(in.chunks.as[Chunk], new RuleExtractor).toDF())),
+        () => sink(GraphAssembly.extractAll(chunks.as[Chunk], new RuleExtractor).toDF())),
       Call("extract", "Embeddings.embedText(chunks)",
-        () => sink(Embeddings.embedText(in.chunks, "chunk_id", "text", er.dim))),
+        () => sink(Embeddings.embedText(chunks, "chunk_id", "text", er.dim))),
       Call("extract", "Embeddings.embedText(communities)",
         () => sink(Embeddings.embedText(cat.read("communities").na.fill("", Seq("description")),
           "community_id", "description", er.dim))),
@@ -110,11 +84,8 @@ object Layers {
       Call("operators", "Lift.typeRelationships",
         () => sink(Lift.typeRelationships(cat.read("triples").as[Triple], cat.read("entity_types")).toDF())),
       Call("resolve", "Resolution.embedEntities",
-        () => sink(Resolution.embedEntities(in.entities.as[Entity], er))),
-      if (delta) Call("resolve", "Resolution.candidatePairsFor",
-        () => sink(Resolution.candidatePairsFor(cat.read("delta_entities"),
-          cat.read("lsh_sigs"), cat.read("embeddings"), er)))
-      else Call("resolve", "Resolution.candidatePairs",
+        () => sink(Resolution.embedEntities(cat.read("entities").as[Entity], er))),
+      Call("resolve", "Resolution.candidatePairs",
         () => sink(Resolution.candidatePairs(cat.read("embeddings"), er))),
       Call("resolve", "Resolution.resolvesTo",
         () => sink(Resolution.resolvesTo(cat.read("entities").as[Entity],
@@ -171,16 +142,6 @@ object Layers {
       .map(_.trim.toLong).getOrElse(er.maxBroadcastBytes)
     nEntities <= bytes / (er.dim.toLong * 4L)
   }
-
-  /** The ER geometry a catalog's pairs were built with: the blocking
-    * index's recorded geometry if there is one, else derived from the
-    * entity count, as `Pipeline` does.
-    */
-  def erParams(cat: Catalog, base: Resolution.Params, nEntities: Long): Resolution.Params =
-    cat.readSidecar("lsh_sigs", "_graft_er_params") match {
-      case Some(Seq(bands, bits, _, _)) => base.copy(bands = bands.toInt, bits = bits.toInt)
-      case _ => Resolution.scaledParams(base, nEntities)
-    }
 
   /** Thrown when a build emits a stage the layer map does not cover. */
   final class Uncovered(msg: String) extends RuntimeException(msg)

@@ -7,17 +7,15 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusSynth
-import graft.model.Page
 import graft.pipeline.Pipeline
 import graft.resolve.Resolution
 
 /** Times one build that `graft.pipeline.Main` ships — `Pipeline.run` into a
-  * fresh catalog, or `Pipeline.runIncremental` against a standing one — in
-  * this JVM at `local[cores]`, and checks its output.
+  * fresh flat catalog — in this JVM at `local[cores]`, and checks its output.
   *
   *   perfbench.PerfBench --workload W --seed N --trace 0|1 --work DIR --cores N
   *
@@ -30,11 +28,11 @@ object PerfBench {
 
   final case class Opts(workload: String, seed: Long, trace: Boolean, work: Path, cores: Int)
 
-  /** Pages of the `full_build` corpus and the base of `incremental_1pct`.
-    * Small on purpose: each repetition is a cold JVM, and a build at this
-    * size is mostly per-stage fixed cost (warm on 4 cores: 200 pages 20.5 s,
-    * 2,000 pages 19–21 s, 4,000 pages 23 s), so a larger corpus would cost
-    * run time and add little.
+  /** Pages of the `full_build` corpus. Each untraced repetition is a cold
+    * JVM, and at this size its build is mostly per-stage fixed cost and JVM
+    * warm-up rather than work that grows with the pages (warm on 4 cores:
+    * 200 pages 20.5 s, 2,000 pages 19–21 s, 4,000 pages 23 s); a corpus
+    * large enough for the data to dominate would not fit the run budget.
     */
   val FullPages = 2000
 
@@ -43,7 +41,7 @@ object PerfBench {
     * long tail of about 7 distinct entities a page.
     */
   def corpusOf(workload: String, seed: Long): CorpusSynth.Config = workload match {
-    case "full_build" | "incremental_1pct" =>
+    case "full_build" =>
       CorpusSynth.Config(seed = seed, nPages = FullPages, nClusters = FullPages / 10)
     case "entity_dense" =>
       CorpusSynth.Config(seed = seed, nPages = FullPages / 2, nClusters = FullPages * 4)
@@ -80,64 +78,33 @@ object PerfBench {
     s
   }
 
-  /** A workload's build, made ready by its untimed set-up.
-    *
-    * @param truth     the corpus the output catalog must reproduce
-    * @param newPages  generates, unforced, the pages the build ingests
-    * @param reference table digests the output must equal, when the set-up
-    *                  built a reference (run.py compares full builds across
-    *                  repetitions instead)
-    */
-  private final case class Workload(runId: String, build: () => Pipeline.Result,
-      truth: CorpusSynth.Config, newPages: () => Dataset[Page],
-      reference: Option[Map[String, String]], delta: Boolean)
-
-  /** Sets up a workload. A full build is the first of its JVM, as each run
-    * of Main is. An incremental batch needs a bucketed base catalog and, for
-    * its check, a flat full build over old ∪ new pages; the batch itself is
-    * generated and materialized here, before the timer.
-    */
-  private def setup(spark: SparkSession, o: Opts): Workload = {
-    val corpus = corpusOf(o.workload, o.seed)
-    def dir(name: String): String = o.work.resolve(name).toString
-    val base = Pipeline.Config(corpus = corpus, outDir = dir("catalog"), runId = "timed")
-    if (o.workload == "incremental_1pct") {
-      val union = corpus.copy(nPages = corpus.nPages + corpus.nPages / 100)
-      val ref = Pipeline.run(spark, base.copy(corpus = union, outDir = dir("reference"), runId = "reference"))
-      val refDigests = Checks.digests(ref.catalog)
-      val cfg = base.copy(incrementalLayout = true)
-      Pipeline.run(spark, cfg.copy(runId = "base"))
-      val newPages = () => CorpusSynth.pagesRange(spark, union, corpus.nPages, union.nPages)
-      val batch = newPages().localCheckpoint(true)
-      Workload(cfg.runId, () => Pipeline.runIncremental(spark, cfg, batch), union, newPages,
-        Some(refDigests), delta = true)
-    } else
-      Workload(base.runId, () => Pipeline.run(spark, base), corpus,
-        () => CorpusSynth.pages(spark, corpus), None, delta = false)
-  }
-
   private def run(spark: SparkSession, o: Opts, sessionS: Double): String = {
+    val corpus = corpusOf(o.workload, o.seed)
+    val cfg = Pipeline.Config(corpus = corpus, outDir = o.work.resolve("catalog").toString,
+      runId = "timed")
+    // An untraced build is the first of its JVM, as each run of Main is.
+    // A traced build is the second: set-up first builds the same corpus
+    // into a scratch catalog, so the stage spans run as warm as the layer
+    // calls they are compared with.
     val t0 = System.nanoTime()
-    val w = setup(spark, o)
+    val warmup = if (o.trace) Some(Sample.time(Pipeline.run(spark,
+      cfg.copy(outDir = o.work.resolve("warmup").toString, runId = "warmup")))._2) else None
     val setupS = sessionS + (System.nanoTime() - t0) / 1e9
 
     val log = if (o.trace) Some(JobLog.install(spark)) else None
-    val sampler = if (o.trace) Some(new CpuSampler) else None
-    val (res, sample) = JobLog.inGroup(spark, "build")(Sample.time(w.build()))
-    sampler.foreach(_.close())
+    val (res, sample) = JobLog.inGroup(spark, "build")(Sample.time(Pipeline.run(spark, cfg)))
     Layers.requireCovered(res.stages.map(_.stage))
 
     // the two checks run side by side: each is a few small jobs
     val c0 = System.nanoTime()
-    val qf = Future(Checks.quality(res.catalog, w.truth))
+    val qf = Future(Checks.quality(res.catalog, corpus))
     val digests = Checks.digests(res.catalog)
     val q = Await.result(qf, Duration.Inf)
-    val ok = q.passes && w.reference.forall(_ == digests)
-    if (!ok) System.err.println(s"[perfbench] output check failed: $q")
-    val triples = res.stages.find(s => Layers.tableOf(s.stage) == "resolved_triples").get.rows
+    if (!q.passes) System.err.println(s"[perfbench] output check failed: $q")
+    val triples = res.stages.find(_.stage == "resolved_triples").get.rows
     System.err.println(f"[perfbench] set-up $setupS%.1f s, build ${sample.wallS}%.1f s, " +
       f"checks ${(System.nanoTime() - c0) / 1e9}%.1f s")
-    val layers = for (l <- log; s <- sampler) yield traced(spark, w, res, sample, l, s)
+    val layers = for (l <- log; w <- warmup) yield traced(spark, cfg, res, sample, w, l)
 
     val values = Seq("setup_s" -> setupS, "wall_s" -> sample.wallS, "cpu_s" -> sample.cpuS,
       "peak_mem_mb" -> sample.peakMemMb, "gc_s" -> sample.gcS, "steal_s" -> sample.stealS,
@@ -145,7 +112,7 @@ object PerfBench {
       "triple_recall" -> q.tripleRecall, "link_precision" -> q.linkPrecision,
       "link_recall" -> q.linkRecall)
     val digest = digests.toSeq.sorted.map { case (t, d) => s"$t=$d" }.mkString(";")
-    s"""{"ok":$ok,"digest":"$digest","sample":${Json.obj(values)},""" +
+    s"""{"ok":${q.passes},"digest":"$digest","sample":${Json.obj(values)},""" +
       s""""layers":${Json.obj(layers.getOrElse(Nil))}}"""
   }
 
@@ -153,16 +120,15 @@ object PerfBench {
     * catalog's lineage rows, then each layer's public functions called on
     * the output catalog's input tables.
     */
-  private def traced(spark: SparkSession, w: Workload, res: Pipeline.Result,
-      sample: Sample, log: JobLog, sampler: CpuSampler): Seq[(String, Double)] = {
+  private def traced(spark: SparkSession, cfg: Pipeline.Config, res: Pipeline.Result,
+      sample: Sample, warmup: Sample, log: JobLog): Seq[(String, Double)] = {
     val cat = res.catalog
-    val runId = w.runId
     final case class Span(table: String, startMs: Long, endMs: Long) {
       def wallS: Double = (endMs - startMs) / 1e3
     }
-    val spans = cat.lineage().where(col("run_id") === runId).collect().toSeq.map { r =>
+    val spans = cat.lineage().where(col("run_id") === cfg.runId).collect().toSeq.map { r =>
       val end = r.getAs[java.sql.Timestamp]("finished_at").getTime
-      Span(Layers.tableOf(r.getAs[String]("stage")), end - r.getAs[Long]("wall_ms"), end)
+      Span(r.getAs[String]("stage"), end - r.getAs[Long]("wall_ms"), end)
     }
     val buildJobs = JobLog.groupJobs(spark, log, "build")
     val m = mutable.LinkedHashMap.empty[String, Double]
@@ -171,8 +137,6 @@ object PerfBench {
       m(s"stage.$t.wall_s") = ss.map(_.wallS).sum
       m(s"stage.$t.jobs") = ss.map(s => buildJobs.count(j => j.startMs >= s.startMs && j.startMs <= s.endMs)).sum.toDouble
     }
-    val stageWall = spans.map(_.wallS).sum
-    val stageCpu = spans.map(s => sampler.between(s.startMs, s.endMs)).sum
 
     final case class Cost(wallS: Double, cpuS: Double, jobs: Seq[JobLog#Job])
     def timed(group: String)(op: => Unit): Cost = {
@@ -183,15 +147,14 @@ object PerfBench {
       Cost(wall, Host.cpuSeconds() - c0, JobLog.groupJobs(spark, log, group))
     }
 
-    // each layer's public calls on the catalog's input tables: one untraced
-    // pass to compile their plans, the traced pass, and one more untraced
-    // pass for the tracing overhead (the cold build cannot be timed both
-    // ways in one JVM, and a second JVM per traced run would not fit the
-    // run budget)
-    val er0 = Pipeline.Config().er
+    // each layer's public calls on the catalog's input tables, after two
+    // builds have warmed their code: the traced pass, then an untraced pass
+    // for the tracing overhead (a third build per traced run, to time the
+    // build both ways, would not fit the run budget)
     val nEntities = cat.read("embeddings").count()
-    val er = Layers.erParams(cat, er0, nEntities)
-    def newCalls = new Layers.Calls(cat, Pipeline.Config(corpus = w.truth), er, w.delta)
+    // the geometry `Pipeline` derives for a flat catalog's entity count
+    val er = Resolution.scaledParams(cfg.er, nEntities)
+    def newCalls = new Layers.Calls(cat, cfg, er)
     def untracedPass(): Double = {
       spark.sparkContext.removeSparkListener(log)
       try newCalls.all.map { c =>
@@ -201,7 +164,6 @@ object PerfBench {
       }.sum
       finally spark.sparkContext.addSparkListener(log)
     }
-    untracedPass()
     val calls = newCalls
     val cost = calls.all.map(c => c.name -> timed(s"layer:${c.name}")(c.run())).toMap
     for (layer <- Layers.Timed) {
@@ -215,15 +177,16 @@ object PerfBench {
       m(s"$layer.skew") = st.skew
     }
     // the generator inside the pages stage
-    val corpusCost = timed("layer:corpus")(Layers.sink(w.newPages().toDF()))
+    val corpusCost = timed("layer:corpus")(Layers.sink(CorpusSynth.pages(spark, cfg.corpus).toDF()))
     m("corpus.wall_s") = corpusCost.wallS
 
-    // an incremental batch is generated before the timer, outside its stages
-    val layerCosts = cost.values.toSeq ++ (if (w.delta) Nil else Seq(corpusCost))
-    val written = cat.fileMetrics().where(col("run_id") === runId)
+    // everything else the build did — Catalog writes and lineage, inside
+    // the stage spans and between them — is the pipeline layer's
+    val layerCosts = cost.values.toSeq :+ corpusCost
+    val written = cat.fileMetrics().where(col("run_id") === cfg.runId)
       .agg(coalesce(sum(col("bytes")), lit(0L))).collect()(0).getLong(0)
-    m("pipeline.wall_s") = stageWall - layerCosts.map(_.wallS).sum
-    m("pipeline.cpu_s") = stageCpu - layerCosts.map(_.cpuS).sum
+    m("pipeline.wall_s") = sample.wallS - layerCosts.map(_.wallS).sum
+    m("pipeline.cpu_s") = sample.cpuS - layerCosts.map(_.cpuS).sum
     m("pipeline.jobs") = (buildJobs.size - layerCosts.map(_.jobs.size).sum).toDouble
     m("pipeline.written_mb") = written / 1048576.0
 
@@ -232,22 +195,19 @@ object PerfBench {
     val emb = cat.read("embeddings")
     var blocking: Layers.Blocking = null
     val blockingCost = timed("sub:blocking") { blocking = Layers.blocking(emb, er) }
-    val pairsWall =
-      if (w.delta) timed("sub:pairs")(Layers.sink(Resolution.candidatePairs(emb, er))).wallS
-      else cost("Resolution.candidatePairs").wallS
     val ccCost = timed("sub:cc") {
       Layers.sink(Resolution.connectedComponents(cat.read("entities").select("entity_id"),
         cat.read("candidate_pairs")))
     }
     m("resolve.blocking_s") = blockingCost.wallS
-    m("resolve.scoring_s") = pairsWall - blockingCost.wallS
+    m("resolve.scoring_s") = cost("Resolution.candidatePairs").wallS - blockingCost.wallS
     m("resolve.cc_s") = ccCost.wallS
     m("resolve.blocked_pairs") = blocking.pairs.toDouble
     m("resolve.pair_yield") =
       if (blocking.pairs > 0) Layers.keptPairs(cat.read("candidate_pairs")).toDouble / blocking.pairs else 0.0
     m("resolve.buckets_pruned") = blocking.bucketsPruned.toDouble
     m("resolve.map_side") = if (Layers.mapSide(spark, er, nEntities)) 1.0 else 0.0
-    m("resolve.params_capped") = if (Layers.paramsCapped(er0, nEntities)) 1.0 else 0.0
+    m("resolve.params_capped") = if (Layers.paramsCapped(cfg.er, nEntities)) 1.0 else 0.0
 
     m("community.louvain_s") = cost("Louvain.run").wallS
     m("community.summarize_s") = cost("Summarize.describeAll").wallS
@@ -256,7 +216,8 @@ object PerfBench {
     m("jvm.gc_s") = sample.gcS
     m("jvm.steal_s") = sample.stealS
     m("jvm.peak_mem_mb") = sample.peakMemMb
-    m("trace.unaccounted_s") = sample.wallS - stageWall
+    m("jvm.warmup_s") = warmup.wallS - sample.wallS
+    m("trace.unaccounted_s") = sample.wallS - spans.map(_.wallS).sum
     m("trace.overhead_ratio") = cost.values.map(_.wallS).sum / untracedPass()
     m.toSeq
   }

@@ -73,30 +73,3 @@ object JobLog {
     log.jobs.asScala.toSeq.filter(_.group == group)
   }
 }
-
-/** Process CPU seconds sampled every 10 ms, so CPU can be charged to any
-  * wall-clock interval afterwards (the stage intervals of a traced build).
-  */
-final class CpuSampler extends AutoCloseable {
-  private val points = new ConcurrentLinkedQueue[(Long, Double)]()
-  @volatile private var running = true
-  private val thread = new Thread(() => {
-    while (running) {
-      points.add((System.currentTimeMillis(), Host.cpuSeconds()))
-      Thread.sleep(10)
-    }
-  }, "perfbench-cpu-sampler")
-  thread.setDaemon(true)
-  thread.start()
-
-  override def close(): Unit = { running = false; thread.join() }
-
-  /** CPU seconds between two epoch-millisecond instants, from the nearest
-    * samples at or before each.
-    */
-  def between(fromMs: Long, toMs: Long): Double = {
-    val ps = points.asScala.toVector
-    def at(t: Long): Double = ps.takeWhile(_._1 <= t).lastOption.orElse(ps.headOption).map(_._2).getOrElse(0.0)
-    at(toMs) - at(fromMs)
-  }
-}
