@@ -71,7 +71,7 @@ object Louvain {
     // dyadic rational (unit counts halved per level), so sums are exact in
     // double regardless of order, and string tie-breaks use UTF-8 byte
     // order exactly like Spark's UTF8String comparison.
-    if (edges.limit((localFinishEdges + 1).toInt).count() <= localFinishEdges) {
+    if (fitsBound(edges, localFinishEdges)) {
       val nodeArr = nodes.select($"id", $"k", $"k_self")
         .as[(String, Double, Double)].collect()
       val edgeArr = edges.select($"src", $"dst", $"w")
@@ -585,6 +585,16 @@ object Louvain {
     (outLevels.result(), outMods.result())
   }
 
+  /** True iff `df` has at most `bound` rows, by a limit-capped count (an
+    * over-bound frame is never counted in full). `limit` takes an Int, so
+    * the bound is clamped to `Int.MaxValue - 1`; any larger bound, e.g.
+    * `Long.MaxValue` for "always local", would overflow the limit.
+    */
+  private def fitsBound(df: DataFrame, bound: Long): Boolean = {
+    val capped = math.min(bound, Int.MaxValue - 1L)
+    df.limit((capped + 1).toInt).count() <= capped
+  }
+
   /** Collect a linksTo frame iff its row count fits the local bound — a
     * count on the (checkpointed) frame first, so an over-bound level never
     * ships rows to the driver.
@@ -592,8 +602,7 @@ object Louvain {
   private def collectIfFits(linksTo: DataFrame, bound: Long): Option[Array[(String, String, Double)]] = {
     val spark = linksTo.sparkSession
     import spark.implicits._
-    val capped = math.min(bound, Int.MaxValue - 1L)
-    if (linksTo.limit((capped + 1).toInt).count() <= capped)
+    if (fitsBound(linksTo, bound))
       Some(linksTo.select($"src", $"dst", $"weight").as[(String, String, Double)].collect())
     else None
   }

@@ -101,8 +101,9 @@ final case class LineageRow(
 /** Per-output-file (= per final write partition) metrics row for one stage
   * commit — the north rule's "per-partition lineage + metrics". Row count and
   * byte size per file make output skew visible (one hot entity bucket shows
-  * up as one fat file), let a resumed run audit exactly which partitions a
-  * stage committed, and cost one footer-cheap job per stage to collect.
+  * up as one fat file) and let a resumed run audit exactly which partitions
+  * a stage committed. Collected on the driver from the FS listing and each
+  * file's parquet footer — no Spark job.
   */
 final case class FileMetricsRow(
     run_id: String,

@@ -2,8 +2,11 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 
 import graft.model.{FileMetricsRow, LineageRow}
 
@@ -440,61 +443,108 @@ final class Catalog(val root: String, val spark: SparkSession) {
 
   private def lineagePath = s"$root/_lineage"
 
-  def appendLineage(row: LineageRow): Unit = {
-    import spark.implicits._
-    Seq(row).toDS().toDF().coalesce(1)
-      .write.mode(SaveMode.Append).parquet(lineagePath)
-  }
+  def appendLineage(row: LineageRow): Unit = appendRows(lineagePath, Seq(row))
 
-  def lineage(): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(lineagePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(lineagePath)
-    else spark.emptyDataset[LineageRow](org.apache.spark.sql.Encoders.product[LineageRow]).toDF()
-  }
+  def lineage(): DataFrame = readRows[LineageRow](lineagePath)
 
   private def fileMetricsPath = s"$root/_lineage_files"
 
   /** Per-partition metrics for a committed stage table (north rule:
     * "per-partition lineage + metrics"): one row per output file with its
-    * row count (one group-by-`input_file_name` job over an empty projection
-    * — the vectorized parquet reader never materializes data columns) and
     * byte size from the recursive FS listing (bucketed tables live under
-    * `_bucket=N/` subdirs). The collect is bounded by the FILE count, never
-    * the row count — at warehouse scale that is O(partitions), the same
-    * cardinality Iceberg's manifest metadata carries.
+    * `_bucket=N/` subdirs) and its row count from the file's parquet footer
+    * — the same per-file metadata Iceberg's manifests carry. All of it is
+    * read on the driver (footers concurrently on a small fixed pool), so
+    * the cost is O(files) footer reads and no Spark job.
     */
   def appendFileMetrics(runId: String, stage: String, table: String = null): Unit = {
     val tbl = Option(table).getOrElse(stage)
     if (!exists(tbl)) return
-    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path(tbl))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sizes = scala.collection.mutable.Map.empty[String, Long]
-    val it = fs.listFiles(p, true)
+    val files = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
+    val it = p.getFileSystem(conf).listFiles(p, true)
     while (it.hasNext) {
       val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        sizes(st.getPath.getName) = st.getLen
+      if (st.getPath.getName.endsWith(".parquet")) files += st
     }
+    val data = files.result()
+    if (data.isEmpty) return
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Catalog.FooterThreads, data.size))
+    val rows = try {
+      import scala.jdk.CollectionConverters._
+      pool.invokeAll(data.map { st =>
+        new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+            try r.getRecordCount finally r.close()
+          }
+        }
+      }.asJava).asScala.map(_.get)
+    } finally pool.shutdown()
     val ts = new Timestamp(System.currentTimeMillis())
-    val perFile = spark.read.parquet(path(tbl))
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
-      .map { r =>
-        val name = r.getString(0).split('/').last
-        FileMetricsRow(runId, stage, name, r.getLong(1), sizes.getOrElse(name, -1L), ts)
-      }
-    spark.createDataset(perFile.toSeq).toDF().coalesce(1)
-      .write.mode(SaveMode.Append).parquet(fileMetricsPath)
+    appendRows(fileMetricsPath, data.zip(rows).map { case (st, n) =>
+      FileMetricsRow(runId, stage, st.getPath.getName, n, st.getLen, ts)
+    })
   }
 
-  def fileMetrics(): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(fileMetricsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(fileMetricsPath)
-    else spark.emptyDataset[FileMetricsRow](org.apache.spark.sql.Encoders.product[FileMetricsRow]).toDF()
+  def fileMetrics(): DataFrame = readRows[FileMetricsRow](fileMetricsPath)
+
+  /** Bookkeeping table under `dir` read with its row class's schema (no
+    * schema-inference job); files from any writer — Spark's INT96
+    * timestamps or [[appendRows]]' INT64 micros — read as one table.
+    */
+  private def readRows[T <: Product: TypeTag](dir: String): DataFrame = {
+    val schema = Encoders.product[T].schema
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
+  /** Append `rows` to the bookkeeping table under `dir` as ONE parquet file
+    * written from the driver with parquet-hadoop's example writer — no Spark
+    * job. The file is written under a hidden name and then renamed into
+    * place, the same atomic one-file append Spark's commit protocol gives:
+    * a crash leaves either no row or all of them. The parquet schema follows
+    * the row class's Spark schema; timestamps are INT64
+    * TIMESTAMP(MICROS, UTC), which Spark reads as its TimestampType.
+    */
+  private def appendRows[T <: Product: TypeTag](dir: String, rows: Seq[T]): Unit = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+    import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
+    if (rows.isEmpty) return
+    val fields = Encoders.product[T].schema.fields
+    val msg = new MessageType("spark_schema", fields.toSeq.map { f =>
+      val rep = if (f.nullable) OPTIONAL else REQUIRED
+      (f.dataType match {
+        case StringType => Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType())
+        case LongType => Types.primitive(INT64, rep)
+        case TimestampType => Types.primitive(INT64, rep)
+          .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
+        case t => throw new IllegalArgumentException(s"appendRows: unsupported column type $t")
+      }).named(f.name)
+    }: _*)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val id = java.util.UUID.randomUUID()
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".part-$id.parquet.inprogress")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(msg).build()
+    try rows.foreach { r =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      for (i <- fields.indices) r.productElement(i) match {
+        case null =>
+        case s: String => g.add(i, s)
+        case n: Long => g.add(i, n)
+        case t: Timestamp => g.add(i, t.getTime * 1000L + t.getNanos / 1000 % 1000)
+      }
+      w.write(g)
+    } finally w.close()
+    require(tmp.getFileSystem(conf).rename(tmp, new org.apache.hadoop.fs.Path(dir, s"part-$id.parquet")),
+      s"appendRows($dir): failed to commit $tmp")
   }
 
   /** A stage is resumable-skippable iff its table committed (_SUCCESS) AND a
@@ -511,6 +561,9 @@ final class Catalog(val root: String, val spark: SparkSession) {
 }
 
 object Catalog {
+  /** Threads reading a table's parquet footers in [[Catalog.appendFileMetrics]]. */
+  private val FooterThreads = 8
+
   /** Run one stage with lineage + resume. `build` must WRITE table
     * `tableName` (defaults to the stage name; incremental stages pass the
     * standing table they merged into) via the catalog before returning.
@@ -528,7 +581,7 @@ object Catalog {
         new Timestamp(System.currentTimeMillis())))
       // per-partition metrics (north rule): file-level rows/bytes, appended
       // after the stage-level row so a crash mid-metrics never orphans a
-      // lineage-less table
+      // lineage-less table; both appends are driver-only (no Spark job)
       cat.appendFileMetrics(runId, stageName, Option(tableName).getOrElse(stageName))
       StageResult(stageName, skipped = false, rows = rows, wallMs = wallMs)
     }

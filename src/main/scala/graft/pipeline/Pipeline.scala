@@ -257,6 +257,11 @@ object Pipeline {
     }
   }
 
+  /** Sidecar holding the [[communityInputsDigest]] a community table was
+    * built from (on `communities` and on `community_embeddings`).
+    */
+  private val CommunityInputs = "_graft_community_inputs"
+
   /** Order-independent fingerprint of EVERY input the community stages
     * derive from: the resolved edge set + canonical-entity set (Louvain's
     * inputs) and the entity descriptions + resolves_to mapping (the
@@ -318,15 +323,24 @@ object Pipeline {
     c.write("modularity",
       louv.modularities.zipWithIndex
         .map { case (q, i) => (i + 1, q) }.toDF("iteration", "modularity"))
-    c.writeSidecar("communities", "_graft_community_inputs",
+    c.writeSidecar("communities", CommunityInputs,
       Seq(inputsDigest.getOrElse(communityInputsDigest(c))))
     nComms
   }
 
+  /** Embeds the community summaries, then records beside them the input
+    * digest of the communities they were embedded from — the embeddings'
+    * own skip proof: a crash between the two community stages leaves the
+    * old embeddings with the old digest, so the next incremental pass
+    * rebuilds them instead of trusting the newer communities' sidecar.
+    */
   private def buildCommunityEmbeddings(c: Catalog, cfg: Config): Long = {
     val comms = c.read("communities").na.fill("", Seq("description"))
-    c.writeCounted("community_embeddings",
+    val n = c.writeCounted("community_embeddings",
       graft.extract.Embeddings.embedText(comms, "community_id", "description", cfg.er.dim))
+    c.readSidecar("communities", CommunityInputs)
+      .foreach(c.writeSidecar("community_embeddings", CommunityInputs, _))
+    n
   }
 
   /** INCREMENTAL run — the reference's actual operating mode: the eventual-
@@ -547,19 +561,20 @@ object Pipeline {
 
     // communities: global recompute like every reference ECC pass — UNLESS
     // the input fingerprint proves nothing community-relevant changed (the
-    // exact-dirty-subset alternative is unsound; see [[buildCommunities]])
-    var communitiesSkipped = false
+    // exact-dirty-subset alternative is unsound; see [[buildCommunities]]).
+    // Each community table skips only on its OWN digest sidecar: the
+    // embeddings need both theirs and the communities' to match, so stale
+    // embeddings left by a crash between the two stages are rebuilt
+    lazy val digest = communityInputsDigest(cat)
+    def provenBy(table: String) =
+      cat.exists(table) && cat.readSidecar(table, CommunityInputs).contains(Seq(digest))
     stage("incr_communities") { c =>
-      val digest = communityInputsDigest(c)
-      if (c.exists("communities") && c.exists("community_embeddings") &&
-          c.readSidecar("communities", "_graft_community_inputs")
-            .contains(Seq(digest))) {
-        communitiesSkipped = true
-        c.read("communities").count()
-      } else buildCommunities(c, spark, Some(digest))
+      if (provenBy("communities")) c.read("communities").count()
+      else buildCommunities(c, spark, Some(digest))
     }
     stage("incr_community_embeddings") { c =>
-      if (communitiesSkipped) c.read("community_embeddings").count()
+      if (provenBy("communities") && provenBy("community_embeddings"))
+        c.read("community_embeddings").count()
       else buildCommunityEmbeddings(c, cfg)
     }
 

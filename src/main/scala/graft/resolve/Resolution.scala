@@ -247,33 +247,13 @@ object Resolution {
         // ladder). maxRows keeps the DENSE byte accounting so the
         // map-side/shuffle switch point — and every plan at every scale —
         // is unchanged. Bit-equality with the dense loop: see [[cosProbe]].
-        // ORDER MATTERS: limit must come AFTER the sparsifying map so the
-        // plan stays a terminal CollectLimitExec over a parallel narrow map
-        // — limit-before-map plans a GlobalLimit single-partition shuffle
-        // that funnels the whole DENSE table through one task (measured
-        // +38% on the 4×4-executor chain wall before this ordering).
-        val probe = embeddings.as[(String, Array[Float])]
-          .mapPartitions(_.map { case (id, v) =>
-            var nnz = 0
-            var i = 0
-            while (i < v.length) { if (v(i) != 0f) nnz += 1; i += 1 }
-            if (nnz.toLong * 2 <= v.length) {
-              val idx = new Array[Int](nnz)
-              val vals = new Array[Float](nnz)
-              var j = 0
-              i = 0
-              while (i < v.length) {
-                if (v(i) != 0f) { idx(j) = i; vals(j) = v(i); j += 1 }
-                i += 1
-              }
-              (id, v.length, idx, vals)
-            } else (id, v.length, null: Array[Int], v)
-          })
-          .limit(maxRows + 1)
-          .collect()
+        val probe = sparseProbe(embeddings, maxRows).collect()
         if (probe.length <= maxRows) {
           val vecMap = spark.sparkContext.broadcast(
             probe.iterator.map { case (id, len, idx, vals) =>
+              // the hoisted norms assume one shared length: a wrong-length
+              // row would silently change cosines, so it fails here
+              require(len == p.dim, s"embedding of '$id' has length $len, expected dim ${p.dim}")
               id -> mkProbeVec(len, idx, vals)
             }.toMap)
           val thr = p.cosineThreshold - 1e-6
@@ -321,6 +301,40 @@ object Resolution {
     sym.withColumn("rank", row_number().over(w))
       .where(col("rank") <= p.topK - 1)
       .drop("rank")
+  }
+
+  /** The scoring probe [[candidatePairs]] collects: (id, length, idx, vals)
+    * per embedding — sparse nnz index/value pairs when that is the smaller
+    * encoding, else `idx` null and `vals` the dense vector — at most
+    * `maxRows + 1` rows. ORDER MATTERS: the limit comes AFTER the
+    * sparsifying map, so the collect plans as a terminal CollectLimitExec
+    * over a parallel narrow map. Limit-before-map plans a GlobalLimit
+    * single-partition shuffle that funnels the whole DENSE table through one
+    * task (measured +38% on the 4×4-executor chain wall); ResolutionSpec
+    * pins the plan shape.
+    */
+  private[resolve] def sparseProbe(embeddings: DataFrame,
+      maxRows: Int): Dataset[(String, Int, Array[Int], Array[Float])] = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    embeddings.as[(String, Array[Float])]
+      .mapPartitions(_.map { case (id, v) =>
+        var nnz = 0
+        var i = 0
+        while (i < v.length) { if (v(i) != 0f) nnz += 1; i += 1 }
+        if (nnz.toLong * 2 <= v.length) {
+          val idx = new Array[Int](nnz)
+          val vals = new Array[Float](nnz)
+          var j = 0
+          i = 0
+          while (i < v.length) {
+            if (v(i) != 0f) { idx(j) = i; vals(j) = v(i); j += 1 }
+            i += 1
+          }
+          (id, v.length, idx, vals)
+        } else (id, v.length, null: Array[Int], v)
+      })
+      .limit(maxRows + 1)
   }
 
   /** Cosine with the exact accumulation order of

@@ -106,6 +106,20 @@ class LouvainSpec extends AnyFunSuite {
     assert(local2 == dist2, "routes diverged on the random graph")
   }
 
+  test("localFinishEdges beyond Int range takes the driver route without overflow") {
+    val (nodes, edges, m) = Louvain.initGraph(cliquesTriples)
+    val default = Louvain.localMoving(nodes, edges, m).as[(String, String)].collect().sorted.toSeq
+    for (bound <- Seq(Long.MaxValue, Int.MaxValue.toLong, 3000000000L)) {
+      val labels = Louvain.localMoving(nodes, edges, m, localFinishEdges = bound)
+      // the driver route returns its labels as a local relation
+      assert(labels.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        s"bound $bound did not take the driver route")
+      assert(labels.as[(String, String)].collect().sorted.toSeq == default,
+        s"bound $bound diverged from the default route")
+    }
+  }
+
   test("driver-side hierarchy finish is identical to the distributed loop") {
     // r5: Louvain.run switches the WHOLE remaining hierarchy driver-side
     // once a level's linksTo fits localFinishEdges (default route on these

@@ -1,12 +1,20 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Encoders, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.corpus.CorpusSynth
+import graft.model.{FileMetricsRow, LineageRow}
 import graft.operators.GraphAssembly
 
 /** End-to-end golden-corpus gate (FIXTURES.md §2, BASELINE.md targets):
@@ -136,6 +144,114 @@ class PipelineSpec extends AnyFunSuite {
       .where(col("stage").isin("pages", "chunks", "triples", "mentions"))
       .where(col("rows_out") =!= col("file_rows"))
     assert(joined.count() == 0, "per-file row sums disagree with lineage rows_out")
+  }
+
+  test("lineage and file-metrics tables keep their row classes' schemas") {
+    def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+    val cat = result.catalog
+    for ((read, dir, rowSchema) <- Seq(
+        (cat.lineage(), "_lineage", Encoders.product[LineageRow].schema),
+        (cat.fileMetrics(), "_lineage_files", Encoders.product[FileMetricsRow].schema))) {
+      assert(shape(read.schema) == shape(rowSchema))
+      // the schema the driver-written files carry themselves
+      assert(shape(spark.read.parquet(s"${cat.root}/$dir").schema) == shape(rowSchema), dir)
+    }
+  }
+
+  test("stage bookkeeping runs no Spark job") {
+    val cat = new Catalog(tmpDir("nojobs"), spark)
+    cat.writeCounted("t", spark.range(100).toDF(), Some(3))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("bookkeeping", "appendLineage + appendFileMetrics")
+      try {
+        cat.appendLineage(LineageRow("r", "t", "fp", 100L, 1L, new Timestamp(System.currentTimeMillis())))
+        cat.appendFileMetrics("r", "t")
+      } finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later job is seen, every
+      // job the bookkeeping could have started has been seen too
+      sc.setJobGroup("sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("sentinel"), "listener never saw the sentinel job")
+      assert(!groups.contains("bookkeeping"), s"bookkeeping started Spark jobs: $groups")
+    } finally sc.removeSparkListener(listener)
+    assert(cat.lineage().count() == 1)
+    val fm = cat.fileMetrics()
+    assert(fm.count() == 3)
+    assert(fm.agg(sum("rows")).collect()(0).getLong(0) == 100L)
+  }
+
+  test("a lineage dir mixing a Spark-written INT96 file with driver-written files reads as one table and resumes") {
+    import spark.implicits._
+    val out = tmpDir("mixed")
+    val cfg = Pipeline.Config(corpus = CorpusSynth.Config(nPages = 30, nClusters = 6),
+      er = graft.resolve.Resolution.Params(dim = 256),
+      outDir = out, runId = "m1")
+    val cat = Pipeline.run(spark, cfg).catalog
+    val rows = cat.lineage().as[LineageRow].collect().toSeq
+    assert(rows.size == 15)
+
+    // an older catalog: its first stages' rows in one Spark-written file
+    // (INT96 timestamps), the later ones appended by the driver
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(s"$out/_lineage")
+    dir.getFileSystem(conf).delete(dir, true)
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val prevTs = spark.conf.getOption(tsKey)
+    spark.conf.set(tsKey, "INT96")
+    try rows.take(5).toDS().coalesce(1).write.mode(SaveMode.Append).parquet(dir.toString)
+    finally prevTs.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+    rows.drop(5).foreach(cat.appendLineage)
+
+    val tsTypes = dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filter(st => st.getPath.getName.endsWith(".parquet") && !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          schema.getType(schema.getFieldIndex("finished_at")).asPrimitiveType.getPrimitiveTypeName.name
+        } finally r.close()
+      }
+    assert(tsTypes.sorted == ("INT96" +: Seq.fill(10)("INT64")).sorted, tsTypes)
+    assert(cat.lineage().as[LineageRow].collect().toSet == rows.toSet)
+
+    val resumed = Pipeline.run(spark, cfg.copy(runId = "m2", resume = true))
+    assert(resumed.stages.forall(_.skipped), s"stages re-ran: ${resumed.stages.filter(!_.skipped)}")
+  }
+
+  test("incremental pass rebuilds community embeddings a crash left stale") {
+    val union = CorpusSynth.Config(seed = 7L, nPages = 60, nClusters = 10)
+    val cfg = Pipeline.Config(corpus = union.copy(nPages = 40),
+      er = graft.resolve.Resolution.Params(dim = 256),
+      outDir = tmpDir("stale"), runId = "base")
+    Pipeline.run(spark, cfg)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val live = new Path(s"${cfg.outDir}/community_embeddings")
+    val fs = live.getFileSystem(conf)
+    val saved = new Path(tmpDir("stale-emb"), "community_embeddings")
+    assert(FileUtil.copy(fs, live, fs, saved, false, conf))
+    def snapshot(): Set[String] =
+      new Catalog(cfg.outDir, spark).read("community_embeddings").collect().map(_.toString).toSet
+
+    val batch = CorpusSynth.pagesRange(spark, union, 40, 60)
+    Pipeline.runIncremental(spark, cfg.copy(runId = "d1"), batch)
+    val fresh = snapshot()
+    // the crash: incr_communities committed the new communities and their
+    // digest sidecar, incr_community_embeddings never ran
+    fs.delete(live, true)
+    assert(FileUtil.copy(fs, saved, fs, live, false, conf))
+    assert(snapshot() != fresh, "the batch must change the community embeddings")
+
+    Pipeline.runIncremental(spark, cfg.copy(runId = "d2"), batch)
+    assert(snapshot() == fresh, "stale community embeddings survived the next incremental pass")
   }
 
   test("incremental run over a new crawl batch == full run over the union corpus") {

@@ -45,6 +45,28 @@ class ResolutionSpec extends AnyFunSuite {
     assert(viaBroadcast.forall { case (s, d, _) => s.startsWith("a") && d.startsWith("a") })
   }
 
+  test("a wrong-length embedding fails map-side scoring instead of changing cosines") {
+    val good = embFrame("a1" -> s"$base alpha", "a2" -> s"$base beta")
+    val short = Seq(("a3", new HashEmbedder(1535, 42).embed(s"$base gamma")))
+      .toDF("entity_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Resolution.candidatePairs(good.unionByName(short), Resolution.Params())
+    }
+    assert(e.getMessage.contains("'a3' has length 1535"), e.getMessage)
+  }
+
+  test("the scoring probe plans as limit-after-map: CollectLimit, no single-partition shuffle") {
+    // a multi-file parquet table, as the pipeline's embeddings stage reads it
+    val dir = java.nio.file.Files.createTempDirectory("graft-probe").resolve("emb").toString
+    embFrame((0 until 8).map(i => s"e$i" -> s"$base token$i"): _*)
+      .repartition(4).write.parquet(dir)
+    val plan = Resolution.sparseProbe(spark.read.parquet(dir), 100).queryExecution.executedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.CollectLimitExec], plan.treeString)
+    assert(!plan.treeString.contains("GlobalLimit"), plan.treeString)
+    assert(plan.find(_.isInstanceOf[org.apache.spark.sql.execution.MapPartitionsExec]).isDefined,
+      plan.treeString)
+  }
+
   test("connectedComponents: local finish and distributed loop agree") {
     val ids = Seq("n0", "n1", "n2", "n3", "n4", "n5", "n6", "n7", "iso")
       .toDF("entity_id")
